@@ -171,11 +171,6 @@ def language_id_oracle_sql(text_expr: str) -> str:
 BPE_TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def token_count(text: Column | str) -> Column:
-    """Whitespace token count (0 for empty docs)."""
-    return F.size(tokens(text))
-
-
 def bpe_token_count(text: Column | str) -> Column:
     """Count of BPE-ish pre-tokenizer matches over normalized text."""
     return F.regexp_count(normalize_text(text), F.lit(BPE_TOKEN_RE))
@@ -264,17 +259,6 @@ def quality_score(text: Column | str) -> Column:
 def content_fingerprint(text: Column | str) -> Column:
     """sha256 hex of the normalized text — exact-dedup key."""
     return F.sha2(normalize_text(text), 256)
-
-
-def minhash_fingerprint(text: Column | str, n: int = 3) -> Column:
-    """Winnowing-style content fingerprint: the minimum md5 hex digest
-    over word n-gram shingles (md5 is identical in DuckDB, keeping this
-    oracle-checkable; the xxhash64 path in dedup.py is the fast one).
-    Empty/short docs fall back to the full-content fingerprint."""
-    sh = word_shingles(text, n)
-    return F.when(
-        F.size(sh) > 0, F.array_min(F.transform(sh, lambda s: F.md5(s)))
-    ).otherwise(content_fingerprint(text))
 
 
 WINNOW_K = 8  # character k-gram length

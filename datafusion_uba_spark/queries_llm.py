@@ -1621,9 +1621,10 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and a hot key combines map-side — the same two-level
     decomposable-aggregate fix the verdict prescribed, obtained
     structurally rather than by salting. The shingle-array frame is
-    persisted so the normalize/tokenize/shingle chain (the heaviest map
-    work) runs once for its two consumers. Zero-shingle docs report 0
-    novel of 0 with novelty_bp = 0 (documented vacuous case)."""
+    pinned with localCheckpoint so the normalize/tokenize/shingle chain
+    (the heaviest map work) runs once for its two consumers. Zero-shingle
+    docs report 0 novel of 0 with novelty_bp = 0 (documented vacuous
+    case)."""
     docs = _docs(spark, sf_dir)
     # localCheckpoint, NOT persist — persist()'s CacheManager entry
     # outlives every reference and silently serves later identical

@@ -12,6 +12,19 @@ every knob is the one you would tune on a real cluster:
   wrong.
 - Arrow on: every Python<->JVM boundary (createDataFrame/toPandas/
   pandas_udf) is Arrow-batched.
+- Codegen cache sized to the query working set: a query's generated
+  classes are compiled once per JVM, not once per execution. The rule is
+  ``spark.sql.codegen.cache.maxEntries`` >= the distinct classes one
+  pass over the registry compiles. Spark's default of 100 is below what
+  8 interactive event rows cycle through (~130), so the LRU evicted
+  each class before its next use and every warm execution recompiled.
+  One pass over all 198 registry rows at sf0.001 with an unbounded
+  cache compiled 2,400 distinct classes, hence 4096; a second pass
+  compiled 69 (rows whose generated code differs per call) where the
+  100-entry cache recompiled 3,410. Cost against the 100-entry cache
+  after both passes: +89 MB of live heap and +23 MB of metaspace. The
+  conf is static: a session that already exists (or one not built
+  here) keeps its value, and Spark only warns.
 """
 
 from __future__ import annotations
@@ -40,6 +53,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Un-zoned parquet TIMESTAMP(isAdjustedToUTC=false) columns would
         # otherwise read as TIMESTAMP_NTZ on Spark 4, which breaks every
         # unix_micros() call site. With this off (the pre-3.4 behavior),

@@ -31,6 +31,7 @@ equivalent contract.
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
 from collections.abc import Sequence
@@ -569,6 +570,77 @@ def _naive_dt(date_str: str):
     return datetime.fromisoformat(date_str)
 
 
+# Reader confs that change the inferred parquet type mapping and that
+# load_table does not pin; part of the schema-reuse key.
+_UNPINNED_PARQUET_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# path -> (footer key, inferred StructType); see _read_parquet_reusing_schema.
+# Process-wide because load_table is a free function; sharing it cannot
+# change a result, since the schema is a function of the key alone.
+_INFERRED_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _footer_key(spark: SparkSession, path: str) -> tuple | None:
+    """Key of the schema Spark infers for ``path``: a digest of the
+    parquet footer (where the schema lives) plus the unpinned reader
+    confs. None when ``path`` is not an absolute local single parquet
+    file — directories, relative paths and other filesystems keep
+    Spark's own inference.
+
+    Not (size, mtime): file timestamps advance in jiffy-sized steps, so
+    an in-place rewrite within a few ms can keep both."""
+    if path.startswith("file:"):
+        local = path[len("file:") :]
+        if local.startswith("//"):  # file:///abs; no authority allowed
+            local = local[2:] if local.startswith("///") else ""
+    elif ":" in path.split("/", 1)[0]:  # another scheme: s3a://, hdfs://
+        return None
+    elif (
+        spark._jsc.hadoopConfiguration()
+        .get("fs.defaultFS", "file:///")
+        .startswith("file:")
+    ):
+        local = path
+    else:
+        return None
+    if not os.path.isabs(local):
+        return None
+    try:
+        with open(local, "rb") as fh:
+            fh.seek(-8, os.SEEK_END)
+            tail = fh.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            n = int.from_bytes(tail[:4], "little")
+            fh.seek(-8 - n, os.SEEK_END)
+            footer = fh.read(n)
+    except (OSError, ValueError):  # directory, missing, shorter than 8 bytes
+        return None
+    confs = tuple(spark.conf.get(k) for k in _UNPINNED_PARQUET_CONFS)
+    return hashlib.blake2b(footer, digest_size=16).digest(), confs
+
+
+def _read_parquet_reusing_schema(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    after the first call on a local file: the StructType Spark inferred
+    is passed back through ``spark.read.schema`` for as long as the
+    file's footer key is unchanged (~1 ms to read in Python, against a
+    ~70 ms inference job). The key is taken before and after inference
+    and the schema kept only if both agree, so a rewrite racing the
+    inference is never cached under a footer it was not inferred
+    from."""
+    key = _footer_key(spark, path)
+    hit = _INFERRED_SCHEMAS.get(path)
+    if key is not None and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None and _footer_key(spark, path) == key:
+        _INFERRED_SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -590,6 +662,10 @@ def load_table(
     100 TB. (The reference leans on the same mechanism: row-group
     pruning enabled in tests/test_with_minio.rs:88.)
     Pinned by tests/test_plan_audit.py::test_date_bounds_pushed_to_scan.
+
+    A local single-file table launches no Spark job after its first
+    load: the inferred schema is reused while the file's parquet footer
+    is unchanged (``_read_parquet_reusing_schema``).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Read un-zoned parquet timestamps as TIMESTAMP (session TZ), not
@@ -599,7 +675,7 @@ def load_table(
     # timezone-naive DuckDB oracle regardless of the host TZ — the
     # driver's own SparkSession does not go through get_spark().
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet_reusing_schema(spark, f"{sf_dir}/{name}.parquet")
     dtypes = dict(df.dtypes)
     for c, (start, end) in (date_bounds or {}).items():
         if dtypes.get(c) == "bigint":
@@ -629,18 +705,6 @@ def load_table(
         if dt == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def register_testdata(
-    spark: SparkSession, sf_dir: str, tables: Sequence[str] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the dict."""
-    out = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def compact_parquet(

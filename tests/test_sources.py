@@ -1,7 +1,11 @@
 """Source surface tests (SURVEY §2.2 S1-S8)."""
 
 import os
+import uuid
+from datetime import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,6 +83,106 @@ def test_load_table_schema_drift_smoke(spark, sf_dir):
             assert dtypes[c] == "timestamp", (name, c, dtypes[c])
         ntz = [c for c, dt in dtypes.items() if "ntz" in dt]
         assert not ntz, f"{name}: TIMESTAMP_NTZ leaked through loader: {ntz}"
+
+
+def _write_events(
+    path, ts_type, first_user=1, n=2, event_type=False, ts_first=False
+):
+    """A small events file with ``ts`` of the given arrow type:
+    ``timestamp("ns")`` writes INT64 TIMESTAMP(NANOS), ``timestamp("us")``
+    the un-zoned micros layout."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    users = list(range(first_user, first_user + n))
+    cols = {
+        "user_id": pa.array(users, pa.int64()),
+        "ts": pa.array([datetime(2024, 1, u, u) for u in users], ts_type),
+    }
+    if event_type:
+        cols["event_type"] = [f"e{u}" for u in users]
+    if ts_first:
+        cols = {"ts": cols.pop("ts"), **cols}
+    pq.write_table(pa.table(cols), path)
+
+
+def _load_with_jobs(spark, sf_dir, name="events"):
+    """load_table plus the ids of the Spark jobs the call started."""
+    sc = spark.sparkContext
+    group = f"load-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = sources.load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_schema_without_a_job(spark, tmp_path):
+    _write_events(str(tmp_path / "events.parquet"), pa.timestamp("us"))
+    first, first_jobs = _load_with_jobs(spark, str(tmp_path))
+    again, again_jobs = _load_with_jobs(spark, str(tmp_path))
+    assert first_jobs, "the first load infers the schema"
+    assert again_jobs == []
+    assert again.dtypes == first.dtypes
+    assert again.collect() == first.collect()
+
+
+@pytest.mark.parametrize("same_mtime", [False, True], ids=["immediate", "same_mtime"])
+def test_load_table_sees_in_place_rewrite(spark, tmp_path, same_mtime):
+    """Rewriting the path in place with another layout is seen by the
+    next load, also when the rewrite keeps the file's mtime: the reuse
+    key is the parquet footer, not (size, mtime). Covers the INT64-nanos
+    to timestamp[us] swap with an added column, a column reorder that
+    keeps the file size too, and the swap back."""
+    path = str(tmp_path / "events.parquet")
+    ns, us = pa.timestamp("ns"), pa.timestamp("us")
+    layouts = [
+        dict(ts_type=ns, first_user=1, n=2),
+        dict(ts_type=us, first_user=5, n=3, event_type=True),
+        dict(ts_type=us, first_user=5, n=3, event_type=True, ts_first=True),
+        dict(ts_type=ns, first_user=9, n=4),
+    ]
+    sizes = []
+    for i, layout in enumerate(layouts):
+        st = os.stat(path) if i else None
+        _write_events(path, **layout)
+        sizes.append(os.stat(path).st_size)
+        if same_mtime and st is not None:
+            os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+        cols = ["user_id", "ts"] + ["event_type"] * layout.get("event_type", 0)
+        if layout.get("ts_first"):
+            cols = ["ts", "user_id", "event_type"]
+        users = range(layout["first_user"], layout["first_user"] + layout["n"])
+        for _ in range(2):  # the inferring load, then the reusing one
+            df = sources.load_table(spark, str(tmp_path), "events")
+            assert [c for c, _ in df.dtypes] == cols
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            got = df.select("user_id", "ts").orderBy("user_id").collect()
+            assert [tuple(r) for r in got] == [
+                (u, datetime(2024, 1, u, u)) for u in users
+            ]
+    assert sizes[1] == sizes[2], "the reorder must keep the size"
+
+
+def test_load_table_infers_directories_and_other_filesystems(spark, tmp_path):
+    """Only an absolute local single file reuses its schema. A directory
+    table and a non-``file:`` filesystem (viewfs mounting a local file)
+    infer on every load, with the result ``spark.read.parquet`` gives."""
+    spark.range(1, 4).selectExpr(
+        "id AS user_id", "timestamp_seconds(id) AS ts"
+    ).write.parquet(str(tmp_path / "dir" / "events.parquet"))
+    _write_events(str(tmp_path / "file" / "events.parquet"), pa.timestamp("us"))
+    mount = f"uba-{uuid.uuid4().hex[:8]}"
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./data", f"file://{tmp_path}"
+    )
+    for sf_dir in (str(tmp_path / "dir"), f"viewfs://{mount}/data/file"):
+        for _ in range(2):
+            got, jobs = _load_with_jobs(spark, sf_dir)
+            assert jobs, f"{sf_dir}: load did not infer"
+            want = spark.read.parquet(f"{sf_dir}/events.parquet")
+            assert got.dtypes == want.dtypes
+            assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_read_avro_gated(spark, tmp_path):
